@@ -170,6 +170,31 @@ for line in sys.stdin:
 """
 
 
+def _prev_round_commit(repo: str) -> tuple[int, str] | None:
+    """(N, commit) of the newest ``round N:`` commit whose
+    ``padawan_spark/`` tree differs from HEAD's — not the highest N: a
+    commit of the current round titled ``round N:`` carries HEAD's own
+    tree, and comparing against it measures HEAD against itself."""
+    import re
+    import subprocess
+
+    def git(*args):
+        return subprocess.run(["git", *args], capture_output=True,
+                              text=True, cwd=repo, timeout=60).stdout
+
+    def tree(rev):
+        return git("rev-parse", "--verify", "-q",
+                   f"{rev}:padawan_spark").strip()
+
+    head = tree("HEAD")
+    for line in git("log", "--format=%H %s").splitlines():  # newest first
+        h, _, msg = line.partition(" ")
+        m = re.match(r"^round (\d+):", msg)
+        if m and tree(h) != head:
+            return int(m.group(1)), h
+    return None
+
+
 class _PrevTree:
     """The PREVIOUS ROUND's tree in a git worktree, driven over a pipe
     so its passes INTERLEAVE with this tree's in one measurement
@@ -179,7 +204,6 @@ class _PrevTree:
     comparison, so it now lives in the bench record itself)."""
 
     def __init__(self, headline, sf_dir):
-        import re
         import subprocess
         import tempfile
         self.proc = None
@@ -187,15 +211,7 @@ class _PrevTree:
         self.wt = None
         self._here = os.path.dirname(os.path.abspath(__file__))
         try:
-            log = subprocess.run(
-                ["git", "log", "--format=%H %s"], capture_output=True,
-                text=True, cwd=self._here, timeout=60).stdout
-            best = None
-            for line in log.splitlines():
-                h, _, msg = line.partition(" ")
-                m = re.match(r"^round (\d+):", msg)
-                if m and (best is None or int(m.group(1)) > best[0]):
-                    best = (int(m.group(1)), h)
+            best = _prev_round_commit(self._here)
             if best is None:
                 return
             self.round, commit = best

@@ -40,37 +40,24 @@ for _m in _SUITES:
 # All queries stay registered; this is a stable re-ordering, not a filter.
 # ---------------------------------------------------------------------------
 
-# code that changed THIS round (r16) — keep driver-visible even
-# though already green.  Deliberately SMALL (VERDICT r15 task 6: the
-# stale cohort is r7's 6 rows + r8's 40, and a 7-sentinel head plus
-# the 11 NEW r16 queries leaves 32 window slots to drain it — the 6 r7
-# rows and the oldest r8 rows re-check this round).
-# src_iceberg_changelog + streaming_iceberg_changes (the changelog
-# was rebuilt for v2 delete files / schema evolution / replace-skip;
-# the stream's partition-value attach now keys by identity SOURCE
-# column — ADVICE r15); src_iceberg_v2_deletes (the equality-delete
-# union factored out of read_iceberg into _eq_delete_union);
-# src_iceberg_v3_row_lineage (ORC/AVRO lineage routing touched the
-# shared targeted-scan plumbing); src_delta_variant_idmap (the
-# layouts/nested taps' narrowed fallback catch + the parquetfooter
-# LIST-collapse fix); src_hudi_mor_read (hudi metadata FILES fold now
-# scopes to its partition; read_hudi grew filters/col-stats pruning).
-# The eleven NEW r16 queries (src_iceberg_changelog_deletes,
-# streaming_iceberg_changes_deletes, src_iceberg_v3_variant,
-# src_iceberg_lineage_mixed, src_hudi_colstats_prune,
-# src_hudi_bloom_prune, src_delta_row_tracking,
-# src_iceberg_changelog_view, src_iceberg_maintenance,
-# text_bigram_lm_score, src_lakehouse_vacuum_plans) are
-# NEVER-CHECKED and enter the window as round-0 staleness
-# automatically.  Sentinels list only PREVIOUSLY-checked queries
-# whose code changed this round.
-_SENTINELS = ["src_iceberg_changelog",
-              "streaming_iceberg_changes",
-              "src_iceberg_v2_deletes",
-              "src_iceberg_v3_row_lineage",
-              "src_delta_variant_idmap",
-              "src_delta_cdf_read",
-              "src_hudi_mor_read"]
+# code that changed since the correctness harness last hashed it —
+# keep it in the window even though already green.  Deliberately SMALL
+# so the rest of the window keeps draining the stalest rows.
+# q15_top_supplier + q11_important_stock (the single-task global-max
+# Window became a parallel scalar aggregate joined back through a 1-row
+# broadcast); sim_ann_ivfpq + sim_pq_adc_topk (the PQ codebook is built
+# once); graph_pagerank + graph_pagerank_users (rounds compose into one
+# DAG); sim_kmeans_train (one row per vector against a broadcast
+# centroid array, distances screened in double and decided in exact
+# decimal on near-ties).  Never-checked queries need no sentinel: they
+# enter the window as round-0 staleness automatically.
+_SENTINELS = ["q15_top_supplier",
+              "q11_important_stock",
+              "sim_ann_ivfpq",
+              "sim_pq_adc_topk",
+              "graph_pagerank",
+              "graph_pagerank_users",
+              "sim_kmeans_train"]
 
 _WINDOW = 50
 

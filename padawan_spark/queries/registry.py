@@ -18,16 +18,25 @@ is deterministic across engines; **aggregation order is not**.  Policy:
   side; write the oracle as ``CAST(SUM(CAST(x AS DECIMAL(18,6))) AS
   DOUBLE)`` / ``... / COUNT(*)``;
 - MIN/MAX/COUNT: natively order-independent, use as-is;
+- screen in double, decide in exact decimal within a proven bound: a
+  comparison of exact sums (an argmin over distances) may be decided
+  from double sums when their gap exceeds a derived bound on the
+  double-vs-decimal error, and must fall back to the exact decimal sums
+  otherwise, or when a double is null or non-finite.  The result is then
+  the exact one, bit for bit (``similarity._km_assign`` derives its
+  bound next to the constants);
 - never put transcendentals (exp/log/pow) into hashed outputs without
   coarse rounding — their libm implementations differ.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -71,7 +80,12 @@ def load(spark: SparkSession, sf_dir: str, name: str,
     directly onto the scan, so a single-row-group file doesn't serialize
     the whole pipeline onto one task."""
     ensure_session_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    reader = spark.read
+    schema = footer_schema(spark, path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.parquet(path)
     if name == "events":
         # ts type is generation-dependent: TIMESTAMP(NANOS) reads as long
         # (nanosAsLong) and truncates to microseconds matching DuckDB's
@@ -84,6 +98,34 @@ def load(spark: SparkSession, sf_dir: str, name: str,
         elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return spread(df) if wide else df
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark infers for the parquet file ``path``, read from
+    its footer on the driver: Spark's own footer conversion
+    (``ParquetFileFormat.readSchemaFromFooter``) under the session's SQL
+    conf, so nanos-as-long and NTZ inference apply exactly as in
+    inference, but without the one-task job inference launches.  None
+    when ``path`` is not a single file: a directory of parts, or a
+    missing path, is left to Spark's own inference and errors.  Reads
+    the footer on every call: a cached schema would outlive a rewrite of
+    the file or a conf change."""
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(hconf).isFile(hpath):
+        return None
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    meta = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            hpath, hconf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(hpath, meta),
+        pq.ParquetToSparkSchemaConverter(state.conf()))
+    return StructType.fromJson(json.loads(schema.json()))
 
 
 def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .registry import load, query
+from .registry import load, query, spread
 
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
@@ -369,105 +369,120 @@ FROM c{last} c JOIN (SELECT j, COUNT(*) AS n_members FROM a{last}
     return sql
 
 
+# Exact distance fold type: decimal(30,9), NOT (38,9) — Spark's decimal
+# addition at the 38-precision cap reduces scale (38,9 + 38,9 -> 38,8, a
+# lossy round the oracle's SUM would not take); at precision 30 the sum
+# is (31,9), exact, and the clamp back to (30,9) is lossless below 1e21.
+# Scale-9 element casts round identically to the oracle's DECIMAL(38,9)
+# casts, so distances match it bit-for-bit.
+_KM_DFOLD = "decimal(30,9)"
+
+# Screening bound: when a double fold already decides the exact argmin.
+# For one centroid let t_i = (x_i - c_i)^2 be the n per-dim squares
+# (the same doubles in both folds), S their real sum, E the exact
+# decimal distance and d the double fold.
+# - E casts each t_i to scale 9, rounding Double.toString(t_i) half-up:
+#   off t_i by at most 5e-10 + 2^-53 t_i, so |E - S| <= n 5e-10 + 2^-53 S.
+# - d is a left fold of n non-negative doubles from 0, n - 1 roundings:
+#   |d - S| <= (n - 1) 2^-53 S to first order.
+# So |E - d| <= n (5e-10 + 2^-53 S): 3.2e-8 + 64 2^-53 S at n = 64.
+# With d1 <= d2 the two smallest double distances, every other centroid
+# has d >= d2, and its E exceeds the winner's once
+# d2 - d1 > 2 n (5e-10 + 2^-53 d2) = n (1e-9 + 2.2e-16 d2).  The screen
+# asks n (1.6e-9 + 4e-16 d2), whose slack covers the second-order terms
+# and the rounding of the gap itself.  Past that gap the exact minimum
+# is strict, so the cluster-id tie-break cannot decide either.  The
+# bound needs every partial sum below the fold type's 1e21 overflow
+# (hence _KM_MAX_D); a null or NaN distance goes to the exact fold too,
+# which defines what those give.
+_KM_GAP_ABS, _KM_GAP_REL, _KM_MAX_D = 1.6e-9, 4e-16, 1e20
+
+
+def _km_assign(rows):
+    """Nearest centroid per row of ``rows``, which carries a vector
+    ``x`` (array<double>) and the centroid table ``cs``
+    (array<struct<j, c: array<double>>>).  Adds ``j``: the argmin of the
+    exact decimal squared distance, ties to the smaller j — exactly
+    what min(struct(exact dist, j)) over (vector, centroid) pairs picks.
+    Adds ``exact``: whether the row needed the exact fold.
+
+    Screen in double, decide in exact decimal: every distance is first a
+    double fold; only a row whose two smallest lie within the proven
+    bound above, or that has a null, NaN or overflow-sized distance,
+    runs the exact decimal(30,9) fold.  The expressions are SQL text, one parse each,
+    rather than ~2k py4j calls of nested Column lambdas."""
+    t = _KM_DFOLD
+    dbl = ("aggregate(zip_with(x, s.c, (a, b) -> (a - b) * (a - b)), 0D,"
+           " (acc, v) -> acc + v)")
+    dec = (f"aggregate(zip_with(x, s.c, (a, b) -> CAST((a - b) * (a - b)"
+           f" AS {t})), CAST(0 AS {t}), (acc, v) -> CAST(acc + v AS {t}))")
+    by_dist = "transform(cs, s -> named_struct('d', {}, 'j', s.j))".format
+    d1, d2 = "try_element_at(dd, 1).d", "try_element_at(dd, 2).d"
+    # the double distances get their own projection: the screen and the
+    # screened answer both read them, and the fold must run once.  A
+    # null or NaN distance fails `d < max` (Spark orders NaN above every
+    # double) and a missing second distance leaves the gap null: all go
+    # exact.
+    return (rows.withColumn("dd", F.expr(f"sort_array({by_dist(dbl)})"))
+            .withColumn("exact", F.expr(
+                f"NOT coalesce(forall(dd, e -> e.d < {_KM_MAX_D!r})"
+                f" AND {d2} - {d1}"
+                f" > size(x) * ({_KM_GAP_ABS!r} + {_KM_GAP_REL!r} * {d2}),"
+                f" false)"))
+            .withColumn("j", F.expr(
+                f"CASE WHEN exact THEN array_min({by_dist(dec)}).j"
+                f" ELSE dd[0].j END"))
+            .drop("dd"))
+
+
 @query("sim_kmeans_train", oracle=_duck_kmeans())
 def sim_kmeans_train(spark, sf_dir):
     """In-engine k-means training (2 Lloyd iterations, K=8) over the
     embedding corpus — the trainer for the IVF coarse quantizer that
     sim_ann_ivf probes (which uses labels as a stand-in codebook; this
-    closes the loop and trains one).  Each round: one broadcast join of
-    the tiny centroid table against the exploded components, a
-    (vec, cluster) distance aggregation, an argmin window, and a
-    centroid-mean aggregation — two vector-keyed shuffles per round, no
-    driver state, no cartesian.  Determinism: per-dim squared residuals
-    are IEEE doubles summed through exact DECIMAL (order-independent),
-    argmin ties break on cluster id, means are exact decimal sums over
-    exact counts.  At 10^9 vectors the same plan holds with the
-    centroid table still broadcast-sized (K x dims rows).  Lineage:
-    centroids localCheckpoint per round (O(1) plan depth, same policy
-    as graph_pagerank)."""
-    e = load(spark, sf_dir, "embeddings", wide=True)
-    # eager localCheckpoint, not .cache() (r16, guide §5): the old
-    # .cache() + unpersist-before-return pair deregistered the cache at
-    # plan-build time, before the returned DataFrame ever ran — the
-    # action then re-scanned the parquet and re-cast per reference
-    # (2 per round + cent0 ≈ 5 passes).  The checkpoint pins the
-    # vector table to this invocation's RDDs exactly once.
-    vec = (e.select("vec_id",
-                    F.col("embedding").cast("array<double>").alias("x"))
-           .localCheckpoint(eager=True))
+    closes the loop and trains one).
+
+    One lazy query, one row per vector per round: the vectors cross-join
+    a broadcast ONE-row table holding every centroid array, the row
+    computes its distances to all of them and its argmin
+    (:func:`_km_assign`), and the centroid update posexplodes that same
+    row into a (cluster, dim) mean aggregation, re-packed into the next
+    round's one-row table.  No (vector, centroid) relation, no argmin
+    shuffle, no join back to the vectors, no checkpoint — both rounds
+    form one DAG that runs when the result is collected.  At 10^9
+    vectors the centroid table stays broadcast-sized (K x dims values).
+
+    Determinism: distances are exact DECIMAL sums of per-dim double
+    squares (order-independent), screened by a double fold that decides
+    only where a proven error bound lets it; argmin ties break on
+    cluster id; means are exact decimal sums over exact counts."""
     d9 = _D9.lower()
-    # centroids as a broadcast table of ARRAYS: distances are computed
-    # per (vector, centroid) row via zip_with + an exact-decimal fold —
-    # no per-dimension fan-out join, so the only shuffled relation per
-    # round is the (vec, cluster) assignment (vs dims x K x vectors rows
-    # for an exploded-component join: at 10^9 vectors that's the
-    # difference between an 8x10^9-row and a 512x10^9-row shuffle).
-    cent = (vec.where(F.col("vec_id") < _KM_K)
-            .select(F.col("vec_id").alias("j"), F.col("x").alias("c")))
-    # fold type: decimal(30,9), NOT (38,9) — Spark's decimal addition at
-    # the 38-precision cap reduces scale (38,9 + 38,9 -> 38,8, a lossy
-    # round the oracle's SUM would not take); at precision 30 the sum is
-    # (31,9), exact, and the clamp back to (30,9) is lossless for these
-    # magnitudes.  Scale-9 element casts round identically to the
-    # oracle's DECIMAL(38,9) casts, so dist values match bit-for-bit.
-    dfold = "decimal(30,9)"
-    # r17 measured-then-reverted (guide §1.2): two attempts to replace
-    # this interpreted higher-order-function fold with compiled
-    # expression trees made it WORSE, not better —
-    # (a) an unrolled sequential (acc + sq).cast chain (128 nested
-    #     decimal nodes): same-window A/B 4.36 s vs 2.39 s (1.8x
-    #     REGRESSION — the generated method for one 64-deep decimal
-    #     expression is too large for the JIT, so it runs in the
-    #     bytecode interpreter, slower than Spark's expression
-    #     interpreter evaluating the lambda);
-    # (b) a balanced depth-6 add tree without intermediate casts:
-    #     pathological (>60 s per pass, killed).
-    # The HOF fold stays: its per-element interpretation is the cheap
-    # part; the exact-decimal arithmetic itself is the contract-bound
-    # cost (the oracle's SUM(CAST(...AS DECIMAL)) demands exact decimal
-    # sums, and algebraic refactorings like Σx²-2Σxc+Σc² change
-    # rounding near argmin ties).  tests/test_argmin_equiv.py keeps the
-    # unroll==fold equivalence pin as documentation of the attempt.
-    sq_dec = lambda a, b: ((a - b) * (a - b)).cast(dfold)  # noqa: E731
-    assign, centcomp = None, None
+    e = load(spark, sf_dir, "embeddings")
+    x = F.col("embedding").cast("array<double>")
+    vec = spread(e).select("vec_id", x.alias("x"))
+    # the initial centroids read the scan directly: spreading 8 rows
+    # would cost an exchange of their own
+    cents = (e.where(F.col("vec_id") < _KM_K)
+             .agg(F.collect_list(F.struct(F.col("vec_id").alias("j"),
+                                          x.alias("c"))).alias("cs")))
     for _ in range(_KM_ITERS):
-        dist = (vec.crossJoin(F.broadcast(cent))
-                .select("vec_id", "j",
-                        F.aggregate(F.zip_with("x", "c", sq_dec),
-                                    F.lit(0).cast(dfold),
-                                    lambda acc, v: (acc + v).cast(dfold))
-                        .alias("dist")))
-        # argmin as a hash aggregate, not a window (r16, guide §2.3):
-        # min(struct(dist, j)) picks exactly the row row_number-over-
-        # (dist asc, j asc) picked (j is unique per vec, struct compare
-        # is lexicographic), but partial aggregation collapses the K
-        # rows per vector map-side — no full sort of the K*N distance
-        # table and K-fold fewer shuffled rows.
-        assign = (dist.groupBy("vec_id")
-                  .agg(F.min(F.struct("dist", "j")).alias("m"))
-                  .select("vec_id", F.col("m.j").alias("j")))
-        # centroid update: explode ONLY the assigned vectors (K*dims
-        # result groups, partial aggregation absorbs the fan-out), then
-        # re-pack per-cluster component means into broadcastable arrays
-        # n_members rides the SAME aggregation (r16): every assigned
-        # vector contributes exactly one posexploded row per dim, so the
-        # per-(j, dim) row count IS the cluster size — the old separate
-        # assign.groupBy(j) re-ran the whole final-round distance+argmin
-        # subtree (assign is not checkpointed) plus one more shuffle and
-        # a join; all three are gone, same integers.
-        centcomp = (vec.join(assign, "vec_id")
+        # n_members rides the mean aggregation: every assigned vector
+        # gives exactly one posexploded row per dim, so the per-(j, dim)
+        # row count IS the cluster size
+        centcomp = (_km_assign(vec.crossJoin(F.broadcast(cents)))
                     .select("j", F.posexplode("x").alias("pos", "val"))
-                    .withColumn("dim", F.col("pos") + 1)
-                    .groupBy("j", "dim")
+                    .groupBy("j", (F.col("pos") + 1).alias("dim"))
                     .agg((F.sum(F.col("val").cast(d9)).cast("double")
                           / F.count(F.lit(1))).alias("cval"),
-                         F.count(F.lit(1)).alias("n_members"))
-                    .localCheckpoint(eager=False))
-        cent = (centcomp
-                .groupBy("j")
-                .agg(F.array_sort(F.collect_list(F.struct("dim", "cval")))
-                     .alias("s"))
-                .select("j", F.transform("s", lambda t: t.cval).alias("c")))
+                         F.count(F.lit(1)).alias("n_members")))
+        # re-pack into the one-row table straight from a global
+        # collect_list: one exchange instead of a per-cluster regroup
+        cents = (centcomp.agg(F.collect_list(F.struct("j", "dim", "cval"))
+                              .alias("l"))
+                 .select(F.expr(
+                     "transform(array_distinct(transform(l, e -> e.j)),"
+                     " k -> named_struct('j', k, 'c', transform(array_sort("
+                     "filter(l, e -> e.j = k)), e -> e.cval)))").alias("cs")))
     return centcomp.select(F.col("j").alias("cluster"), "dim",
                            F.round("cval", 9).alias("cval"), "n_members")
 

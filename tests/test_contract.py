@@ -96,3 +96,38 @@ def test_scale_smoke_sf1_table_matches_headline_set():
     assert tot, "sf1 section must quote its totals"
     assert abs(sum(float(r[1]) for r in rows) - float(tot.group(1))) < 0.01
     assert abs(sum(float(r[2]) for r in rows) - float(tot.group(2))) < 0.01
+
+
+def test_prev_round_commit_skips_commits_sharing_head_tree(tmp_path):
+    """The bench's previous-tree A/B baseline is the newest ``round N:``
+    commit whose padawan_spark/ tree differs from HEAD's.  A later
+    ``round N:`` commit that leaves the package as HEAD has it (a
+    round's own snapshot) must be skipped, or the A/B compares HEAD
+    with itself."""
+    import subprocess
+    import sys
+
+    sys.path.insert(0, _ROOT)
+    from bench import _prev_round_commit
+
+    def git(*args):
+        return subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, check=True, capture_output=True,
+            text=True).stdout.strip()
+
+    def commit(msg, body):
+        (tmp_path / "padawan_spark").mkdir(exist_ok=True)
+        (tmp_path / "padawan_spark" / "m.py").write_text(body)
+        git("add", "-A")
+        git("commit", "-q", "--allow-empty", "-m", msg)
+        return git("rev-parse", "HEAD")
+
+    git("init", "-q")
+    assert _prev_round_commit(str(tmp_path)) is None
+    commit("round 1: seed", "a")
+    r2 = commit("round 2: change", "b")
+    commit("round 9: snapshot", "c")
+    commit("round 10: snapshot again", "c")   # same tree as HEAD below
+    commit("work: not a round commit", "c")
+    assert _prev_round_commit(str(tmp_path)) == (2, r2)

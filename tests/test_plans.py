@@ -679,6 +679,28 @@ def test_dedup_clusters_one_job_per_round(spark, sf_dir, monkeypatch):
     assert res.count() > 0
 
 
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+def test_load_takes_footer_schema_without_a_job(spark, sf_dir, scale):
+    """registry.load() hands spark.read the schema Spark's own footer
+    conversion gives, read on the driver: loading fires no Spark job,
+    and for every table the schema equals what Spark's inference job
+    finds (nanos-as-long, NTZ inference and all)."""
+    import os
+
+    from padawan_spark.queries.registry import TABLES, footer_schema, load
+
+    d = os.path.join(os.path.dirname(sf_dir), scale)
+    if not os.path.isdir(d):
+        pytest.skip(f"no {scale} tables next to {sf_dir}")
+    st = spark.sparkContext.statusTracker()
+    for t in TABLES:
+        before = set(st.getJobIdsForGroup())
+        load(spark, d, t)
+        assert set(st.getJobIdsForGroup()) == before, t
+        path = f"{d}/{t}.parquet"
+        assert footer_schema(spark, path) == spark.read.parquet(path).schema, t
+
+
 def test_importance_resampling_broadcasts_ratio_table(spark):
     """The DSIR scoring scan must consume the per-token ratio table and
     the 1-row totals via broadcast (vocabulary-sized sides never
